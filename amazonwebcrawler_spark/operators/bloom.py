@@ -16,9 +16,13 @@ seen set every wave — the Bloom filter is the scale path:
   task, never duplicated per candidate row;
 * the filter admits false positives but never false negatives, so:
   ``maybe_seen == False`` → definitely new (no exact check needed);
-  ``maybe_seen == True``  → confirmed against the exact ``seen`` table with
-  a ``left_anti`` join — which at scale only touches the tiny
-  TP+FP subset instead of the whole frontier.
+  ``maybe_seen == True``  → confirmed against the exact ``seen`` table.
+  The crawler does both in one ``left_anti`` join whose condition is
+  ``canonical_url`` equality AND ``maybe_seen`` (plans/crawler.py
+  ``confirm_unseen``): Bloom-negative rows can never match and pass
+  through, but every candidate still flows through the join and the
+  ``seen`` side is scanned each wave — the ``shard_sets`` mode below
+  avoids both.
 
 Sizing: with the default ``bits_per_item=12, k=5`` the false-positive rate
 is ~0.3%; at 10^10 URLs that is 15 GB of filter split over shards

@@ -7,13 +7,14 @@ predicate (frontier emptiness + early-stop flags — tiny collects, C5/A3):
 
     while frontier non-empty:
         batch, deferred = token-bucket dequeue per host shard   (C2, W4)
-        fetched  = batch.mapInPandas(fetch)                      (S4-S6)
+        fetched  = batch.mapInPandas(fetch + image decode/phash) (S4-S6, S12)
         parsed   = from_json per page kind                       (P1-P13)
-        results |= classify ⨝ broadcast(dims) + rank encode      (J1/J2, W1-W3)
-        images  |= decode/phash pandas-UDF over fetched bytes    (S12, input_hint)
-        expand   = pagination + item/sku/cart fan-out            (J4, L1)
+        results |= first-match classify + rank encode            (J1/J2, W1-W3)
+        images  |= projection of the decoded detail images       (S12, input_hint)
+        expand   = one inline(concat(...)) generator per page:
+                   pagination + item/sku/cart links              (J4, L1)
         new      = canonicalize → robots → in-wave dedup →
-                   bloom probe → exact anti-join confirm         (P14, C7, P15/J6)
+                   one bloom probe → one anti-join confirm       (P14, C7, P15/J6)
         frontier = deferred ∪ retries ∪ new;  seen |= new        (C3)
         snapshot commit                                          (C6, S10)
 
@@ -28,7 +29,7 @@ local[32] produce byte-identical crawl orders (tests/test_equivalence.py).
 
 from __future__ import annotations
 
-import os
+import time
 from dataclasses import dataclass, field
 
 import pandas as pd
@@ -36,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from amazonwebcrawler_spark.functions.images import PNG_SIG, decode_image, phash64
 from amazonwebcrawler_spark.functions.rank import (
     first_match_struct,
     is_sponsored,
@@ -83,8 +85,6 @@ CATEGORY_JSON = (
     "items array<struct<pos:int,title:string,href:string,asin:string,img_src:string>>"
 )
 CART_JSON = "kind string, asin string, inventory string, alert string"
-
-IMAGES_SCHEMA = "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long"
 
 
 @dataclass
@@ -142,56 +142,62 @@ class CrawlConfig:
 
 
 # ---------------------------------------------------------------- fetch UDF
-def _fetch_batches(batches):
-    """mapInPandas kernel: the sandbox 'network' (synthetic_world.fetch).
+#: columns the fetch kernel appends to the batch rows; the image fields are
+#: null for pages without an image and for failed fetches
+FETCH_FIELDS = [
+    T.StructField("status", T.IntegerType()),
+    T.StructField("content", T.StringType()),
+    T.StructField("image_bytes", T.BinaryType()),
+    T.StructField("image_id", T.StringType()),
+    T.StructField("w", T.IntegerType()),
+    T.StructField("h", T.IntegerType()),
+    T.StructField("fmt", T.StringType()),
+    T.StructField("phash", T.LongType()),
+]
 
-    Real deployment swaps the body for an async HTTP client; the signature,
+
+def _image_fields(url: str, data: bytes | None) -> tuple:
+    """(image_id, w, h, fmt, phash) of a fetched image; all None without one."""
+    if data is None:
+        return (None,) * 5
+    px = decode_image(data)
+    asin = url.rsplit("/dp/", 1)[-1].split("/")[0].split("?")[0]
+    fmt = "png" if data[:8] == PNG_SIG else "jpeg"
+    return f"img-{asin}", px.shape[1], px.shape[0], fmt, phash64(px)
+
+
+def _fetch_batches(batches):
+    """mapInPandas kernel: the sandbox 'network' (synthetic_world.fetch),
+    plus decode + phash of each fetched image (S12, input_hint).
+
+    Real deployment swaps the fetch for an async HTTP client; the signature,
     batching, and schema are the engine contract. Transient failures are
     deterministic per (url, attempt) → status=-1, retried by the loop (C3).
+    Decoding here, next to the fetch, spares the wave a second Python stage
+    over the image bytes: the ``images`` table is a JVM projection.
     """
     for pdf in batches:
-        statuses, contents, images = [], [], []
+        statuses, contents, images, meta = [], [], [], []
         for u, attempt in zip(pdf["canonical_url"], pdf["attempt"]):
             if world.fetch_is_transient_failure(u, int(attempt)):
-                statuses.append(-1)
-                contents.append(None)
-                images.append(None)
+                r = {"status": -1, "content": None, "image_bytes": None}
             else:
                 r = world.fetch(u)
-                statuses.append(r["status"])
-                contents.append(r["content"])
-                images.append(r["image_bytes"])
+            statuses.append(r["status"])
+            contents.append(r["content"])
+            images.append(r["image_bytes"])
+            meta.append(_image_fields(u, r["image_bytes"]))
+        image_ids, ws, hs, fmts, phashes = zip(*meta) if meta else ((),) * 5
         out = pdf.copy()
         out["status"] = pd.Series(statuses, dtype="int32")
         out["content"] = contents
         out["image_bytes"] = images
+        out["image_id"] = list(image_ids)
+        out["w"] = pd.array(ws, dtype="Int32")
+        out["h"] = pd.array(hs, dtype="Int32")
+        out["fmt"] = list(fmts)
+        out["phash"] = pd.array(phashes, dtype="Int64")
         yield out
-
-
-def _decode_image_batches(batches):
-    """mapInPandas kernel: decode fetched image bytes → typed metadata + phash
-    (input_hint: decode via vectorized Arrow batches, never per-row Spark)."""
-    from amazonwebcrawler_spark.functions.images import decode_image, phash64
-
-    for pdf in batches:
-        rows = []
-        for url, data, caption in zip(pdf["canonical_url"], pdf["image_bytes"], pdf["caption"]):
-            if data is None:
-                continue
-            px = decode_image(bytes(data))
-            asin = url.rsplit("/dp/", 1)[-1].split("/")[0].split("?")[0]
-            rows.append(
-                {
-                    "image_id": f"img-{asin}",
-                    "bytes": bytes(data),
-                    "w": px.shape[1],
-                    "h": px.shape[0],
-                    "fmt": "png" if bytes(data)[:8] == b"\x89PNG\r\n\x1a\n" else "jpeg",
-                    "caption": caption,
-                    "phash": phash64(px),
-                }
-            )
-        yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt", "caption", "phash"])
 
 
 # ---------------------------------------------------------------- helpers
@@ -232,6 +238,118 @@ def _classify_kind(url: F.Column) -> F.Column:
         .when(url.startswith(f"{world.HOST}/gp/cart/view.html?"), "cart")
         .otherwise("404")
     )
+
+
+#: one discovered link: the expansion generator's element type
+LINK_TYPE = "struct<raw_url:string,depth:int,parent_seq:bigint,parent_pos:int,paging:boolean>"
+
+
+def _expand_links(ok: DataFrame, cfg: CrawlConfig) -> DataFrame:
+    """Fetched pages → discovered links (J4/L1), one generator per page.
+
+    Each page kind is parsed once, and every link the page yields is built
+    into one typed array per source: pagination, SERP items, category
+    items, SKU variants, cart probe; ``inline(concat(...))`` emits them in
+    one map stage over the fetched pages. Each array is coalesced to a
+    typed empty array because ``concat`` is null if any input is null.
+    ``paging`` marks pagination links, which early stop retires.
+    """
+    serp = F.col("_serp")
+    detail = F.col("_detail")
+    category = F.col("_category")
+    host = F.lit(world.HOST)
+    in_depth = F.col("depth") + 1 <= F.col("max_depth")
+
+    def link(raw_url: F.Column, parent_pos: F.Column, paging: bool = False) -> F.Column:
+        return F.struct(
+            raw_url.alias("raw_url"),
+            (F.col("depth") + 1).alias("depth"),
+            F.col("discovery_seq").alias("parent_seq"),
+            parent_pos.alias("parent_pos"),
+            F.lit(paging).alias("paging"),
+        )
+
+    def links(cond: F.Column, arr: F.Column) -> F.Column:
+        typed = f"array<{LINK_TYPE}>"
+        return F.coalesce(F.when(cond, arr).cast(typed), F.array().cast(typed))
+
+    next_page = F.concat(
+        F.lit(f"{world.HOST}/s?field-keywords="),
+        F.regexp_replace(serp.keyword, " ", "+"),
+        F.lit("&page="), (serp.page + 1).cast("string"),
+    )
+    parts = [
+        links(
+            serp.has_next & (serp.page < F.col("max_depth")),
+            # pagination after items (BFS tie-break)
+            F.array(link(next_page, F.lit(100000), paging=True)),
+        )
+    ]
+    if cfg.follow_items:
+        parts += [
+            links(
+                in_depth,
+                F.transform(
+                    F.filter(serp.items, lambda it: it.href.isNotNull()),
+                    lambda it: link(F.concat(host, it.href), it.pos),
+                ),
+            ),
+            links(in_depth, F.transform(category.items, lambda it: link(F.concat(host, it.href), it.pos))),
+        ]
+    if cfg.follow_skus:
+        # P11: empty dp_url falls back to the product page URL
+        def sku_url(sku: F.Column) -> F.Column:
+            return F.when(sku.dp_url == "", F.col("canonical_url")).otherwise(F.concat(host, sku.dp_url))
+
+        parts.append(links(in_depth, F.transform(detail.skus, lambda sku, i: link(sku_url(sku), i + 1))))
+    if cfg.probe_inventory:
+        cart_url = F.concat(
+            F.lit(f"{world.HOST}/gp/cart/view.html?asin="), detail.asin, F.lit("&qty=999")
+        )
+        parts.append(
+            links(
+                in_depth & (F.col("kind") == "detail"),
+                F.array(link(cart_url, F.lit(200000))),  # probes after sku links
+            )
+        )
+    kind = F.col("kind")
+    return (
+        ok.select(
+            "seed_id", "canonical_url", "kind", "depth", "discovery_seq",
+            "product_type", "max_depth", "keyword",
+            F.when(kind == "serp", F.from_json("content", SERP_JSON)).alias("_serp"),
+            F.when(kind == "detail", F.from_json("content", DETAIL_JSON)).alias("_detail"),
+            F.when(kind == "category", F.from_json("content", CATEGORY_JSON)).alias("_category"),
+        )
+        .select("seed_id", "product_type", "max_depth", "keyword", F.inline(F.concat(*parts)))
+    )
+
+
+def confirm_unseen(
+    keyed: DataFrame, shards: DataFrame, seen: DataFrame | None, cfg: CrawlConfig
+) -> DataFrame:
+    """Bloom-keyed candidates (P15/J6) → those not in the seen set.
+
+    The Bloom probe runs once and has one consumer. ``seen_table`` mode
+    confirms with one left_anti join on ``canonical_url`` equality AND
+    ``maybe_seen``: Bloom-negative rows can never match, so they pass
+    through unchecked, and only the positives are confirmed by exact URL
+    equality against ``seen`` (None: nothing committed yet). ``shard_sets`` mode
+    answers exact membership inside the same cogroup task that probes the
+    bitset — no seen-table scan, no anti-join shuffle.
+    """
+    if cfg.exact_confirm == "shard_sets":
+        probed = bloom.probe_shards(keyed, shards, cfg.bloom, exact=True)
+        return probed.filter(~F.col("exact_seen")).drop("maybe_seen", "exact_seen")
+    probed = bloom.probe_shards(keyed, shards, cfg.bloom)
+    if seen is not None:
+        seen_urls = seen.select(F.col("canonical_url").alias("_seen_url"))
+        probed = probed.join(
+            seen_urls,
+            (F.col("canonical_url") == F.col("_seen_url")) & F.col("maybe_seen"),
+            "left_anti",
+        )
+    return probed.drop("maybe_seen")
 
 
 class CrawlEngine:
@@ -374,16 +492,7 @@ class CrawlEngine:
         shards: DataFrame,
         next_seq: int,
     ):
-        import time as _time
-
-        _marks: list[tuple[str, float]] = []
-
-        def _mark(label: str) -> None:
-            if os.environ.get("AWC_DEBUG_TIMING"):
-                _marks.append((label, _time.time()))
-
-        t_wave0 = _time.time()
-        _mark("start")
+        t_wave0 = time.time()
         cfg, spark, store = self.cfg, self.spark, self.store
 
         batch, deferred, _ranked = select_wave_batch(
@@ -391,14 +500,7 @@ class CrawlEngine:
         )
 
         # ---- fetch (S4-S6): one mapInPandas over the batch, partitioned by shard
-        fetched_schema = T.StructType(
-            list(batch.schema.fields)
-            + [
-                T.StructField("status", T.IntegerType()),
-                T.StructField("content", T.StringType()),
-                T.StructField("image_bytes", T.BinaryType()),
-            ]
-        )
+        fetched_schema = T.StructType(list(batch.schema.fields) + FETCH_FIELDS)
         # the politeness window already hash-partitioned the cached ranked
         # frontier by host_shard (its Exchange); an explicit repartition on
         # the same key is NOT elided through the InMemoryRelation boundary
@@ -422,26 +524,23 @@ class CrawlEngine:
         )
         dead = failed.filter(F.col("attempt") >= cfg.max_retries)
         ok = fetched.filter(F.col("status") == 200)
-        _mark("fetch_declared")
 
         # ---- parse per kind (P1-P13): from_json, fully declarative
         serp = ok.filter(F.col("kind") == "serp").withColumn("p", F.from_json("content", SERP_JSON))
         detail = ok.filter(F.col("kind") == "detail").withColumn("p", F.from_json("content", DETAIL_JSON))
-        category = ok.filter(F.col("kind") == "category").withColumn("p", F.from_json("content", CATEGORY_JSON))
         cart = ok.filter(F.col("kind") == "cart").withColumn("p", F.from_json("content", CART_JSON))
 
         serp_items = (
             serp.select(
-                "seed_id", "keyword", "canonical_url", "discovery_seq", "host_shard",
+                "seed_id", "keyword", "canonical_url", "host_shard",
                 F.col("p.page").alias("page"), F.col("p.layout").alias("layout"),
-                F.col("p.has_next").alias("has_next"), "product_type", "max_depth", "depth",
+                F.col("p.has_next").alias("has_next"), "product_type",
                 F.posexplode_outer("p.items").alias("_i", "item"),
             )
             .select(
                 "*",
                 F.col("item.pos").alias("pos"),
                 F.coalesce(F.col("item.title"), F.lit("Amazon recommendation")).alias("title"),  # P2
-                F.col("item.href").alias("href"),
                 F.col("item.is_sponsored").alias("item_is_sponsored"),
             )
             .drop("_i")
@@ -486,7 +585,6 @@ class CrawlEngine:
             F.col("p.asin").alias("asin"), F.col("p.title").alias("title"),
             F.col("p.variant_axis").alias("variant_axis"), F.col("p.rank_mode").alias("rank_mode"),
             F.col("p.rank1").alias("rank1"), F.col("p.rank2").alias("rank2"),
-            F.col("p.skus").alias("skus"),
         )
         cart_rows = cart.select(
             F.lit(wave).alias("wave"), "seed_id", "canonical_url", "host_shard",
@@ -494,15 +592,13 @@ class CrawlEngine:
             F.col("p.inventory").alias("inventory"), F.col("p.alert").alias("alert"),
         )
 
-        # ---- images (S12): decode + phash pandas-UDF over fetched bytes
-        images = (
-            detail.select("canonical_url", "image_bytes", F.col("p.title").alias("caption"))
-            .mapInPandas(_decode_image_batches, IMAGES_SCHEMA)
+        # ---- images (S12): the fetch kernel already decoded every image
+        images = detail.filter(F.col("image_bytes").isNotNull()).select(
+            "image_id", F.col("image_bytes").alias("bytes"), "w", "h", "fmt",
+            F.col("p.title").alias("caption"), "phash",
         )
 
         # ---- expansion (J4/L1): pagination + items + skus + cart probes
-        expansions = []
-        nxt = serp.filter(F.col("p.has_next") & (F.col("p.page") < F.col("max_depth")))
         wave_flags = None
         if cfg.early_stop:
             # A3/L2: a seed with ≥1 sponsored and ≥1 natural own hit stops
@@ -528,84 +624,15 @@ class CrawlEngine:
                 .filter((F.col("_a") == 1) & (F.col("_n") == 1))
                 .select("seed_id")
             )
-            nxt = nxt.join(F.broadcast(done), "seed_id", "left_anti")
-        expansions.append(
-            nxt.select(
-                "seed_id",
-                F.concat(
-                    F.lit(f"{world.HOST}/s?field-keywords="),
-                    F.regexp_replace(F.col("p.keyword"), " ", "+"),
-                    F.lit("&page="), (F.col("p.page") + 1).cast("string"),
-                ).alias("raw_url"),
-                (F.col("depth") + 1).alias("depth"),
-                F.col("discovery_seq").alias("parent_seq"),
-                F.lit(100000).alias("parent_pos"),  # pagination after items (BFS tie-break)
-                "product_type", "max_depth", "keyword",
+        candidates = _expand_links(ok, cfg)
+        if cfg.early_stop:
+            # early stop retires pagination links only
+            candidates = candidates.join(
+                F.broadcast(done.withColumnRenamed("seed_id", "_done_seed")),
+                (F.col("seed_id") == F.col("_done_seed")) & F.col("paging"),
+                "left_anti",
             )
-        )
-        if cfg.follow_items:
-            expansions.append(
-                serp_items.filter(
-                    F.col("href").isNotNull() & (F.col("depth") + 1 <= F.col("max_depth"))
-                ).select(
-                    "seed_id",
-                    F.concat(F.lit(world.HOST), F.col("href")).alias("raw_url"),
-                    (F.col("depth") + 1).alias("depth"),
-                    F.col("discovery_seq").alias("parent_seq"),
-                    F.col("pos").alias("parent_pos"),
-                    "product_type", "max_depth", "keyword",
-                )
-            )
-            cat_items = category.select(
-                "seed_id", "depth", "discovery_seq", "product_type", "max_depth", "keyword",
-                F.explode("p.items").alias("item"),
-            )
-            expansions.append(
-                cat_items.filter(F.col("depth") + 1 <= F.col("max_depth")).select(
-                    "seed_id",
-                    F.concat(F.lit(world.HOST), F.col("item.href")).alias("raw_url"),
-                    (F.col("depth") + 1).alias("depth"),
-                    F.col("discovery_seq").alias("parent_seq"),
-                    F.col("item.pos").alias("parent_pos"),
-                    "product_type", "max_depth", "keyword",
-                )
-            )
-        if cfg.follow_skus:
-            skus = detail_rows.select(
-                "seed_id", "canonical_url", "discovery_seq", "depth",
-                "product_type", "max_depth", "keyword",
-                F.posexplode("skus").alias("sku_pos", "sku"),
-            )
-            expansions.append(
-                skus.filter(F.col("depth") + 1 <= F.col("max_depth")).select(
-                    "seed_id",
-                    # P11: empty dp_url falls back to the product page URL
-                    F.when(F.col("sku.dp_url") == "", F.col("canonical_url"))
-                    .otherwise(F.concat(F.lit(world.HOST), F.col("sku.dp_url")))
-                    .alias("raw_url"),
-                    (F.col("depth") + 1).alias("depth"),
-                    F.col("discovery_seq").alias("parent_seq"),
-                    (F.col("sku_pos") + 1).alias("parent_pos"),
-                    "product_type", "max_depth", "keyword",
-                )
-            )
-        if cfg.probe_inventory:
-            expansions.append(
-                detail_rows.filter(F.col("depth") + 1 <= F.col("max_depth")).select(
-                    "seed_id",
-                    F.concat(
-                        F.lit(f"{world.HOST}/gp/cart/view.html?asin="), F.col("asin"), F.lit("&qty=999")
-                    ).alias("raw_url"),
-                    (F.col("depth") + 1).alias("depth"),
-                    F.col("discovery_seq").alias("parent_seq"),
-                    F.lit(200000).alias("parent_pos"),  # probes after sku links
-                    "product_type", "max_depth", "keyword",
-                )
-            )
-
-        candidates = expansions[0]
-        for e in expansions[1:]:
-            candidates = candidates.unionByName(e)
+        candidates = candidates.drop("paging")
 
         # ---- canonicalize → robots → in-wave dedup → seen dedup (P14/C7/P15/J6)
         candidates = (
@@ -637,24 +664,8 @@ class CrawlEngine:
         )
 
         keyed = bloom.with_bloom_keys(candidates, "canonical_url", cfg.bloom)
-        if cfg.exact_confirm == "shard_sets":
-            # exact membership answered inside the SAME cogroup task that
-            # probes the bitset — no seen-table scan, no anti-join shuffle
-            probed = bloom.probe_shards(keyed, shards, cfg.bloom, exact=True)
-            pre = probed.filter(~F.col("exact_seen")).drop("maybe_seen", "exact_seen").persist()
-        else:
-            probed = bloom.probe_shards(keyed, shards, cfg.bloom)
-            fresh_sure = probed.filter(~F.col("maybe_seen"))
-            # bloom-positive rows: confirm against the exact seen set (left_anti
-            # touches only this small subset — the scale path, SURVEY.md P15)
-            seen = self.store.load_deltas("seen")
-            maybe = probed.filter(F.col("maybe_seen"))
-            confirmed_new = (
-                maybe.join(seen.select("canonical_url"), "canonical_url", "left_anti")
-                if seen is not None
-                else maybe
-            )
-            pre = fresh_sure.unionByName(confirmed_new).drop("maybe_seen").persist()
+        seen = store.load_deltas("seen") if cfg.exact_confirm == "seen_table" else None
+        pre = confirm_unseen(keyed, shards, seen, cfg).persist()
 
         # ---- data-defined discovery order (W4): seq from (parent, pos, url)
         # assigned WITHOUT a global single-task window — per-parent rank +
@@ -687,9 +698,7 @@ class CrawlEngine:
             .select([f.name for f in FRONTIER_SCHEMA.fields] + ["h1", "h2", "bucket"])
             .persist()
         )
-        _mark("new_rows")
         next_seq += n_new
-        t_computed = _time.time()
 
         new_frontier = (
             deferred.select([f.name for f in FRONTIER_SCHEMA.fields])
@@ -727,7 +736,6 @@ class CrawlEngine:
             # partitionBy writer emits one file per live combo instead of
             # (in-memory partitions × combos) tiny files
             new_frontier = new_frontier.repartition(cfg.n_shards, "depth", "host_shard")
-        _mark("frontier_count")
 
         # compaction cadence: every compact_every-th wave rewrites the hot
         # state chains (seen / shards / seed_flags) as a full base so the
@@ -752,7 +760,7 @@ class CrawlEngine:
             )
             .withColumn("wave", F.lit(wave))
             .withColumn("wave_t_start", F.lit(float(t_wave0)))
-            .withColumn("wave_build_sec", F.lit(round(_time.time() - t_wave0, 3)))
+            .withColumn("wave_build_sec", F.lit(round(time.time() - t_wave0, 3)))
         )
         # per-page shape metrics (A1/P8/P9): the reference's audible >45-row
         # alarm (getRank.py:165-167) and empty-page message (getRank.py:211)
@@ -819,12 +827,9 @@ class CrawlEngine:
                 "results": delta(results if has_serp else None),
                 "quarantine": delta(quarantine if has_serp else None),
                 "seed_flags": flags_df,
-                "detail_results": delta(detail_rows.drop("skus") if has_detail else None),
+                "detail_results": delta(detail_rows if has_detail else None),
                 "cart_results": delta(cart_rows if has_cart else None),
-                # images keep natural partitioning: coalesce would collapse
-                # the (CPU-heavy, Python) decode stage itself, and the binary
-                # rows already produce well-sized files
-                "images": images if has_detail else None,
+                "images": delta(images if has_detail else None),
                 "metrics": delta(metrics),
                 "page_metrics": delta(page_metrics if has_serp else None),
                 "lineage": delta(lineage),
@@ -843,23 +848,5 @@ class CrawlEngine:
         pre.unpersist()
         _ranked.unpersist()
         n_frontier = int(store.counter("n_frontier"))
-        _mark("commit")
         next_hot, next_cold = self._load_frontier()
-        out = (
-            next_hot,
-            next_cold,
-            store.load_shard_state(),
-            next_seq,
-            n_frontier,
-        )
-        if os.environ.get("AWC_DEBUG_TIMING"):
-            deltas = " ".join(
-                f"{label}={t - prev:.1f}s"
-                for (label, t), (_, prev) in zip(_marks[1:], _marks[:-1])
-            )
-            print(
-                f"[wave {wave}] compute={t_computed - t_wave0:.1f}s "
-                f"commit={_time.time() - t_computed:.1f}s n_new={n_new} | {deltas}",
-                flush=True,
-            )
-        return out
+        return next_hot, next_cold, store.load_shard_state(), next_seq, n_frontier

@@ -5,13 +5,13 @@ crash (getRank.py:479, 426-430; getStockNumber.py:151-153) — bounded loss,
 but no way to resume mid-run. Here every wave commits an **atomic snapshot**
 in the Iceberg style: data files first, then a single manifest JSON whose
 rename is the commit point. A crash loses at most the in-flight wave;
-``latest_manifest`` + ``load`` give exact resume (tested in
-tests/test_resume.py).
+``latest_manifest`` + the loaders give exact resume (tested in
+tests/test_crawler.py::TestResume).
 
 Layout under ``root``::
 
     frontier/wave=<n>/   full frontier snapshot at end of wave n
-    shards/wave=<n>/     full Bloom shard snapshot
+    shards/wave=<n>/     Bloom shard versions of the buckets wave n dirtied
     seen/wave=<n>/       seen-set DELTA appended by wave n
     results/wave=<n>/    parsed result DELTA
     images/wave=<n>/     image+caption DELTA (input_hint schema)
@@ -19,10 +19,12 @@ Layout under ``root``::
     lineage/wave=<n>/    per-partition lineage rows
     _manifests/manifest-<n>.json   the commit records
 
-Full-snapshot tables (frontier, shards) are read from the latest wave only;
-delta tables are read as the union of all committed waves. At 10^10 scale
-the shard snapshot would become per-bucket copy-on-write (only dirty buckets
-rewritten) — same manifest mechanics, noted here for the scale path.
+The frontier is a full snapshot, read from the latest wave only. Shard
+state is per-bucket copy-on-write: a wave rewrites only the buckets it
+dirtied, and ``load_shard_state`` takes the latest version of each bucket.
+Delta tables are read as the union of committed waves. ``seen``, ``shards``
+and ``seed_flags`` are compacted every few waves into a full base, and
+loaders stop descending the wave chain at the latest base.
 """
 
 from __future__ import annotations

@@ -10,9 +10,10 @@ from pyspark.sql import functions as F
 
 from amazonwebcrawler_spark.operators import bloom
 from amazonwebcrawler_spark.plans import reports
-from amazonwebcrawler_spark.plans.crawler import CrawlConfig, CrawlEngine
+from amazonwebcrawler_spark.plans.crawler import CrawlConfig, CrawlEngine, confirm_unseen
 from amazonwebcrawler_spark.sources import synthetic_world as world
 from amazonwebcrawler_spark.sources.seeds import seeds_df
+from amazonwebcrawler_spark.sources.state_store import StateStore
 
 SEED_ROWS = [
     (0, "keyword", "yoga mat", world.serp_url("yoga mat", 1), "yogamat", 2),
@@ -55,12 +56,25 @@ class TestCrawlInvariants:
                 assert str(stock) in r.alert
 
     def test_images_match_details(self, spark, crawl):
-        """every fetched detail page yields exactly one image+caption row
-        with engine-recomputed phash equal to the world's (input_hint)."""
+        """every fetched detail page yields exactly one image+caption row:
+        the fields the fetch kernel decoded equal a fresh decode of the
+        stored bytes, the caption is the detail page's title, and the
+        engine-recomputed phash equals the world's (input_hint)."""
+        from amazonwebcrawler_spark.functions.images import PNG_SIG, decode_image
+
         details = crawl.load_deltas("detail_results")
         images = crawl.load_deltas("images")
         assert images.count() == details.count()
-        for r in images.limit(20).collect():
+        titles = {f"img-{r.asin}": r.title for r in details.select("asin", "title").collect()}
+        rows = images.collect()
+        assert {r.image_id for r in rows} == set(titles)
+        for r in rows:
+            data = bytes(r.bytes)
+            px = decode_image(data)
+            assert (r.w, r.h) == (px.shape[1], px.shape[0])
+            assert r.fmt == ("png" if data[:8] == PNG_SIG else "jpeg")
+            assert r.caption == titles[r.image_id]
+        for r in rows[:20]:
             asin = r.image_id[len("img-") :]
             rec = world.image_record(asin)
             assert (r.w, r.h, r.fmt, r.phash) == (rec["w"], rec["h"], rec["fmt"], rec["phash"])
@@ -291,6 +305,60 @@ class TestCompaction:
         sa = {r.bucket: r.n_items for r in full.load_shard_state().collect()}
         sb = {r.bucket: r.n_items for r in resumed.load_shard_state().collect()}
         assert sa == sb
+
+
+class TestBloomConfirm:
+    def test_one_probe_equals_two_branch_union(self, spark, tmp_path):
+        """The seen_table confirm probes the Bloom shards ONCE (one cogroup
+        in the executed plan; the old fresh ∪ left_anti(maybe) union ran
+        the probe once per branch) and keeps exactly the rows that union
+        kept — on a filter small enough to give false positives."""
+        cfg = _cfg(str(tmp_path), bloom=bloom.BloomConfig(n_buckets=2, m_bits=1 << 10))
+        seen_urls = [f"{world.HOST}/dp/S{i:05d}" for i in range(400)]
+        seen0 = spark.createDataFrame(
+            list(enumerate(seen_urls)), "discovery_seq long, canonical_url string"
+        )
+        store = StateStore(spark, str(tmp_path))
+        store.commit_wave(
+            -1,
+            {
+                "shards": bloom.merge_into_shards(
+                    bloom.with_bloom_keys(seen0, "canonical_url", cfg.bloom),
+                    bloom.empty_shards(spark, cfg.bloom),
+                    cfg.bloom,
+                ),
+                "seen": seen0,
+            },
+            {"next_seq": 0},
+        )
+        shards, seen = store.load_shard_state(), store.load_deltas("seen")
+
+        new_urls = [f"{world.HOST}/dp/N{i:05d}" for i in range(400)]
+        cands = spark.createDataFrame(
+            list(enumerate(seen_urls[::2] + new_urls)), "parent_pos long, canonical_url string"
+        )
+        keyed = bloom.with_bloom_keys(cands, "canonical_url", cfg.bloom)
+        probed = bloom.probe_shards(keyed, shards, cfg.bloom)
+        maybe = probed.filter(F.col("maybe_seen"))
+        two_branch = (
+            probed.filter(~F.col("maybe_seen"))
+            .unionByName(maybe.join(seen.select("canonical_url"), "canonical_url", "left_anti"))
+            .drop("maybe_seen")
+        )
+        confirmed = confirm_unseen(keyed, shards, seen, cfg)
+
+        def n_probes(df):
+            return df._jdf.queryExecution().executedPlan().toString().count(
+                "FlatMapCoGroupsInPandas"
+            )
+
+        assert n_probes(confirmed) == 1
+        assert n_probes(two_branch) == 2
+        # non-vacuous: some never-seen URLs are Bloom positives
+        assert maybe.filter(F.col("canonical_url").contains("/dp/N")).count() > 0
+        rows = sorted(confirmed.collect())
+        assert rows == sorted(two_branch.collect())
+        assert sorted(r.canonical_url for r in rows) == new_urls
 
 
 class TestPrunedDequeue:
